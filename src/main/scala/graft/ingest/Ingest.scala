@@ -69,8 +69,15 @@ object Ingest {
   }
 
   /** RAW table name from a lake prefix: `'_'.join(prefix.split(' ')) +
-    * "_RAW"` — extract.py:162-164 (lowercased for Spark catalog rules).
+    * "_RAW"` — extract.py:162-164 — lowercased, with every character
+    * outside `[a-z0-9_]` replaced by '_', so the name (and the `_stg`
+    * view name derived from it) is always a valid unquoted Spark
+    * identifier. Divergence: Snowflake's `write_pandas` quotes the
+    * reference's names, so there "Rock'n Roll" keeps its apostrophe in
+    * `ROCK'N_ROLL_RAW`; here it becomes `rock_n_roll_raw`. Two keys that
+    * map to one name are refused by `Pipeline.loadWarehouse`.
     */
   def rawTableName(channelKey: String): String =
-    (channelKey.split(' ').mkString("_") + "_RAW").toLowerCase
+    (channelKey + "_RAW").toLowerCase(java.util.Locale.ROOT)
+      .replaceAll("[^a-z0-9_]", "_")
 }

@@ -1,7 +1,10 @@
 package graft.lake
 
+import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.ingest.Ingest
 
 /** The lake layer (reference: per-channel S3 CSV objects, one prefix per
@@ -39,12 +42,37 @@ object Lake {
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
-  /** S2/S3: read the whole lake (or one channel via partition pruning). */
+  @volatile private var pinned: StructType = _
+
+  /** The parquet lake's schema: `Ingest.extract`'s output over no
+    * responses (an analysis-only plan, no job) plus the `channel_key`
+    * partition column. Derived once per JVM, not written out, so it
+    * cannot drift from `Schemas`/`Flatten`.
+    */
+  private def schema(spark: SparkSession): StructType = {
+    if (pinned == null)
+      pinned = Ingest.extract(spark, Nil, new Timestamp(0L)).schema
+        .add("channel_key", StringType)
+    pinned
+  }
+
+  /** S2/S3: read the whole lake (or one channel via partition pruning).
+    * The pinned `schema` spares every read the parquet reader's
+    * schema-inference job over the lake's footers, so a channel load is
+    * one Spark job (the write).
+    */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(schema(spark)).parquet(path)
 
   def readChannel(spark: SparkSession, path: String, channelKey: String): DataFrame =
     read(spark, path).filter(col("channel_key") === channelKey)
+
+  /** One channel's partition directory, escaped exactly as the
+    * partitioned writer named it: key `Rock'n_Roll` lives in
+    * `channel_key=Rock%27n_Roll`.
+    */
+  def channelPath(path: String, channelKey: String): String =
+    s"$path/${ExternalCatalogUtils.getPartitionPathString("channel_key", channelKey)}"
 
   /** Channel discovery (reference: s3.list_objects, extract.py:158-159)
     * — a pure filesystem directory listing of the `channel_key=` partition

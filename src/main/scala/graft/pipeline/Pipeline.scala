@@ -52,18 +52,47 @@ object Pipeline {
     * `loading_data_db` (extract.py:205-208,156-171). Channel discovery is
     * a filesystem listing (like the reference's bucket listing); each
     * load is truncate+reload (W2). Returns qualified table names.
+    *
+    * The reference reloads the channels one after another; here the
+    * loads run concurrently on at most `defaultParallelism` driver
+    * threads, so one channel's planning and commit overlap the others'
+    * tasks. The threads are started from the caller's thread and so
+    * inherit its Spark local properties (job group, scheduler pool).
+    * Every load finishes before the first failure (in channel order) is
+    * rethrown, so a `Retry` of this stage never overlaps a straggler.
+    * Two channel keys that map to one RAW table are refused before any
+    * load starts.
     */
   def loadWarehouse(spark: SparkSession, conf: Config): Seq[String] = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${conf.database}")
-    Lake.channels(spark, conf.lakePath).map { ch =>
-      val table = s"${conf.database}.${Ingest.rawTableName(ch)}"
-      val df =
-        if (conf.csvLake)
-          Lake.readCsv(spark, s"${conf.lakePath}/channel_key=$ch")
-        else Lake.readChannel(spark, conf.lakePath, ch).drop("channel_key")
-      Warehouse.loadRaw(df, table)
-      table
+    val channels = Lake.channels(spark, conf.lakePath)
+    val tables = channels.map(ch => s"${conf.database}.${Ingest.rawTableName(ch)}")
+    channels.zip(tables).groupBy(_._2).values.find(_.size > 1).foreach { clash =>
+      throw new IllegalArgumentException(
+        s"channel keys ${clash.map(_._1).sorted.mkString("'", "', '", "'")} " +
+          s"all load into table ${clash.head._2}")
     }
+    def load(i: Int): Unit = {
+      val df =
+        if (conf.csvLake) Lake.readCsv(spark, Lake.channelPath(conf.lakePath, channels(i)))
+        else Lake.readChannel(spark, conf.lakePath, channels(i)).drop("channel_key")
+      Warehouse.loadRaw(df, tables(i))
+    }
+    val failures = new Array[Throwable](channels.size)
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val workers = Seq.tabulate(channels.size.min(spark.sparkContext.defaultParallelism)) { w =>
+      new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < channels.size) {
+          try load(i) catch { case e: Throwable => failures(i) = e }
+          i = next.getAndIncrement()
+        }
+      }, s"graft-load-$w")
+    }
+    workers.foreach(_.start())
+    workers.foreach(_.join())
+    failures.find(_ != null).foreach(e => throw e)
+    tables
   }
 
   /** W4: one identity staging view per RAW table (dbt `materialized:

@@ -12,10 +12,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Warehouse {
 
-  /** W2: truncate + insert (or auto-create on first load). */
+  /** W2: truncate + insert (or auto-create on first load), in one Spark
+    * job. The table gets one file per `spark.sql.files.maxPartitionBytes`
+    * of input (at least one), however many files the input has: a lake
+    * channel holds one small file per batch, and without the coalesce
+    * every batch file would become a RAW file and then a mart task.
+    */
   def loadRaw(df: DataFrame, table: String): Unit = {
-    clearStaleLocation(df.sparkSession, table)
-    df.write.mode("overwrite").format("parquet").saveAsTable(table)
+    val spark = df.sparkSession
+    clearStaleLocation(spark, table)
+    val inBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val files = ((inBytes + maxBytes - 1) / maxBytes).max(1).min(Int.MaxValue).toInt
+    df.coalesce(files).write.mode("overwrite").format("parquet").saveAsTable(table)
   }
 
   /** W3: the optimized_extract.py:106-107 variant — head(5) + append w/

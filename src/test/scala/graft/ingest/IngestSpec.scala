@@ -37,6 +37,17 @@ class IngestSpec extends SparkSpec {
     assert(Ingest.rawTableName("MrBeast") === "mrbeast_raw")
   }
 
+  test("rawTableName is a valid Spark identifier for any channel key") {
+    assert(Ingest.rawTableName("Rock'n_Roll") === "rock_n_roll_raw")
+    assert(Ingest.rawTableName("Caf\u00e9_M\u00fcsic") === "caf__m_sic_raw")
+    assert(Ingest.rawTableName("A#B.C`D") === "a_b_c_d_raw")
+    for (key <- Seq("Rock'n_Roll", "A#B.C`D", "X+Y_Z", "100%")) {
+      val name = Ingest.rawTableName(key)
+      assert(spark.sessionState.sqlParser.parseMultipartIdentifier(s"db.$name") ===
+        Seq("db", name), key)
+    }
+  }
+
   test("extract drops API housekeeping columns and stamps a batch-constant timestamp") {
     val ts = Timestamp.from(Instant.parse("2026-02-01T00:00:00Z"))
     val raw = Ingest.extract(spark,

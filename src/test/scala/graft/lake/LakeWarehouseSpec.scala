@@ -71,6 +71,25 @@ class LakeWarehouseSpec extends SparkSpec {
     assert(Lake.unescapePartitionValue("100%") === "100%")
   }
 
+  test("Lake.read's pinned schema equals the schema parquet infers from the lake") {
+    val lake = scratch("lake_schema")
+    Lake.appendBatch(batch(ts1, 1), lake)
+    Lake.appendBatch(batch(ts2, 2), lake)
+    assert(Lake.read(spark, lake).schema === spark.read.parquet(lake).schema)
+    assert(Lake.read(spark, lake).collect().map(_.toString).sorted ===
+      spark.read.parquet(lake).collect().map(_.toString).sorted)
+  }
+
+  test("channelPath names the directory the partitioned writer made") {
+    val lake = scratch("lake_csv_escape")
+    val rock = Ingest.extract(spark, Seq(json(Chan(1, "Rock'n#Roll", 1, 5.0), 1)), ts1)
+    Lake.appendBatchCsv(rock, lake)
+    assert(Lake.channels(spark, lake) === Seq("Rock'n_Roll"))
+    assert(Lake.channelPath(lake, "Rock'n_Roll") === s"$lake/channel_key=Rock%27n_Roll")
+    assert(new java.io.File(Lake.channelPath(lake, "Rock'n_Roll")).isDirectory)
+    assert(Lake.readCsv(spark, Lake.channelPath(lake, "Rock'n_Roll")).count() === 1)
+  }
+
   test("CSV lake variant roundtrips with header + inferred schema") {
     val lake = scratch("lake_csv")
     Lake.appendBatchCsv(batch(ts1, 1), lake)

@@ -14,12 +14,13 @@ class PipelineSpec extends SparkSpec {
     SyntheticChannels.Chan(5, "Pipe#C", 3, 8.0))  // k=5 -> malformed viewCount
   private val nBatches = 2
 
-  private def batches =
+  private def batches(cs: Seq[SyntheticChannels.Chan] = chans) =
     (1 to nBatches).map(b =>
-      SyntheticChannels.batchTs(b) -> chans.map(SyntheticChannels.json(_, b)))
+      SyntheticChannels.batchTs(b) -> cs.map(SyntheticChannels.json(_, b)))
 
-  private def runWith(name: String, csv: Boolean) =
-    Pipeline.run(spark, batches,
+  private def runWith(name: String, csv: Boolean,
+                      cs: Seq[SyntheticChannels.Chan] = chans) =
+    Pipeline.run(spark, batches(cs),
       Pipeline.Config(lakePath = scratch(s"pipe_lake_$name"),
         database = s"ytanalytics_$name", csvLake = csv))
 
@@ -45,9 +46,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("header-CSV lake variant produces the same mart as parquet") {
-    val pq = runWith("pq2", csv = false).collect().map(_.toString).sorted
-    val cs = runWith("csv", csv = true).collect().map(_.toString).sorted
+    // "Rock'n Roll": key Rock'n_Roll, lake dir channel_key=Rock%27n_Roll,
+    // table rock_n_roll_raw
+    val withRock = chans :+ SyntheticChannels.Chan(4, "Rock'n#Roll", 4, 3.0)
+    val pq = runWith("pq2", csv = false, withRock).collect().map(_.toString).sorted
+    val cs = runWith("csv", csv = true, withRock).collect().map(_.toString).sorted
     assert(cs === pq)
+    assert(pq.length === withRock.size * nBatches)
+    assert(pq.count(_.startsWith("[Rock'n Roll,")) === nBatches)
   }
 
   test("staging views are registered in the session (W4)") {
@@ -76,7 +82,7 @@ class PipelineSpec extends SparkSpec {
         sys.error("injected extract fault")
       case _ => ()
     }
-    val mart = Pipeline.runWithRetries(spark, batches,
+    val mart = Pipeline.runWithRetries(spark, batches(),
       Pipeline.Config(lakePath = lake, database = "ytanalytics_retry_flaky"),
       attempts = 3, taskProbe = probe)
     assert(failed.get(), "fault was never injected")
